@@ -162,11 +162,22 @@ class Engine:
         #: as_of pin, which misses the cache and replaces the stale frame
         #: naturally.
         self._rung_frames: dict = {}
+        #: (partials frame, retention bound, read_rollup_series frame) for
+        #: the FINE rollup: its build embeds the same tag-key collect as a
+        #: rung's.  snapshot._read_section hands back the same partials
+        #: frame while the log-gated file set is unchanged, so the frame
+        #: is built once per generation; a directory fallback is a new
+        #: frame on every call and never hits.
+        self._fine_frame: tuple | None = None
         #: (checked_to pin, scanned-to seq, verdict) memo for
         #: _fine_foreign_tail — incremental: each log entry is scanned
         #: at most once per engine lifetime; reset when the pin moves
         self._fine_foreign_memo: tuple | None = None
         self._tag_keys_cache: list[str] | None = None
+        #: Bumped by every tag-key invalidation (see _drop_tag_keys): a
+        #: _tag_keys() read that began before a drop must not store its
+        #: older key set after it.
+        self._tag_keys_epoch = 0
         #: Shaped-response cache — the reference's memcached tier, scoped
         #: to a COMMIT-LOG GENERATION: keys are (canonical request JSON,
         #: log head seq at serve time).  Every write path (points, rollup,
@@ -192,6 +203,7 @@ class Engine:
         import threading
 
         self._result_cache_lock = threading.Lock()
+        self._tag_keys_lock = threading.Lock()
         #: Incremental per-metric generation state (guarded by the cache
         #: lock): (scanned-to seq, {metric: last seq whose points-append
         #: footprint named it}, wildcard floor seq raised by every commit
@@ -254,7 +266,17 @@ class Engine:
             rollup_dir=self.rollup_dir,
             content_fp=SKIP_CONTENT_FP,
         )
-        self._tag_keys_cache = None  # batch may introduce new tag keys
+        # The catalog's key set only gains keys this batch carries, so a
+        # batch of already-known keys leaves the cache exact; anything
+        # else (a new key, a malformed point) drops it.
+        known = set(self._tag_keys_cache or ()) | {"ksid", "ttl"}
+        if not all(
+            isinstance(p, dict)
+            and isinstance(p.get("tags"), dict)
+            and known.issuperset(p["tags"])
+            for p in points
+        ):
+            self._drop_tag_keys()
         return {"success": len(points) - n_bad, "failed": n_bad}
 
     def drain_bus(
@@ -311,7 +333,7 @@ class Engine:
             # sink), so the tag-key cache must drop on EVERY exit path —
             # a raise that skipped this served stale tag columns against
             # data the engine had already committed (review finding).
-            self._tag_keys_cache = None
+            self._drop_tag_keys()
 
     # -- query ------------------------------------------------------------
 
@@ -324,23 +346,43 @@ class Engine:
         map per new series).  The catalog is #series-bounded, so this scan
         stays tiny no matter how many points land; scanning the lake's tags
         column per HTTP request would be a full 100 TB read on the hot path.
-        Cached per engine; writers (put / delete_meta) invalidate.
+        Cached per engine.  A ``put`` whose points carry only known keys
+        keeps the cache (the catalog can only gain keys a batch carries); a
+        put with a new key, ``drain_bus`` and ``delete_meta`` invalidate.
+
+        That rule holds only if the cached set is the HEAD catalog's, so the
+        read ignores the request's pin: a query pinned before a new-key put
+        would otherwise re-cache the older set after the put dropped it, and
+        later known-key puts would keep it.  A superset is harmless to a
+        pinned query (the extra ``tag_<k>`` columns are null in its rows).
+        A read that an invalidation overtook returns its keys uncached.
         """
-        if self._tag_keys_cache is None:
+        with self._tag_keys_lock:
+            keys, epoch = self._tag_keys_cache, self._tag_keys_epoch
+        if keys is None:
             from pyspark.errors import AnalysisException
 
             try:
-                cat = self._read_catalog()
+                cat = self._read_catalog(pinned=False)
             except AnalysisException:  # no catalog yet → no tag keys yet
                 return []
-            self._tag_keys_cache = sorted(
+            keys = sorted(
                 r[0]
                 for r in cat.select(
                     F.explode(F.map_keys("tags")).alias("k")
                 ).distinct().collect()
                 if r[0] not in ("ksid", "ttl")
             )
-        return self._tag_keys_cache
+            with self._tag_keys_lock:
+                if self._tag_keys_epoch == epoch:
+                    self._tag_keys_cache = keys
+        return keys
+
+    def _drop_tag_keys(self) -> None:
+        """Invalidate the tag-key cache, including any read in flight."""
+        with self._tag_keys_lock:
+            self._tag_keys_cache = None
+            self._tag_keys_epoch += 1
 
     def checkpoint(self) -> int:
         """Enable log-gated reads for this lake (streaming/snapshot.py):
@@ -401,14 +443,15 @@ class Engine:
             self.lake_dir,
         )
 
-    def _read_catalog(self) -> DataFrame:
-        """Catalog twin of :meth:`_read_lake` (same fallback contract)."""
+    def _read_catalog(self, pinned: bool = True) -> DataFrame:
+        """Catalog twin of :meth:`_read_lake` (same fallback contract);
+        ``pinned=False`` reads the head even inside a pinned request."""
         from mycenae_spark.streaming import snapshot as snap
 
         return self._snapshot_or_dir(
             lambda: snap.read_catalog_snapshot(
                 self.spark, self.lake_dir, self.catalog_dir,
-                as_of=self._pinned_as_of(),
+                as_of=self._pinned_as_of() if pinned else None,
             ),
             self.catalog_dir,
         )
@@ -591,6 +634,7 @@ class Engine:
             from mycenae_spark.streaming.rollup import (
                 read_rollup_series,
                 rollup_coverage_complete,
+                sketch_retained_from,
             )
 
             # Route onto partials only when the rollup provably covers the
@@ -617,11 +661,19 @@ class Engine:
                 # clamp_to_retention: the Engine memoizes this frame and
                 # refuses pre-horizon fine-grain queries per request via
                 # _guard_fine_retention — the library default (refuse)
-                # would brick construction over a legally pruned lake
-                rollup = read_rollup_series(
-                    self.spark, self.rollup_dir, df=roll_df,
-                    clamp_to_retention=True,
-                )
+                # would brick construction over a legally pruned lake.
+                # The clamp bound is the marker's horizon, so it keys the
+                # memo alongside the partials frame.
+                bound = sketch_retained_from(self.rollup_dir)
+                memo = self._fine_frame
+                if memo and memo[0] is roll_df and memo[1] == bound:
+                    rollup = memo[2]
+                else:
+                    rollup = read_rollup_series(
+                        self.spark, self.rollup_dir, df=roll_df,
+                        clamp_to_retention=True,
+                    )
+                    self._fine_frame = (roll_df, bound, rollup)
         return pts, rollup
 
     def _run_subquery(self, pts, rollup, q) -> list:
@@ -1702,7 +1754,7 @@ class Engine:
             # CAS and the rename (see maintenance.swap_catalog_dir); the
             # superseded generation is retained for pinned snapshot readers
             swap_catalog_dir(self.catalog_dir, tmp, snapshot, retain_seq=seq)
-            self._tag_keys_cache = None
+            self._drop_tag_keys()
             return {"deleted": n_before - n_after, "remaining": n_after}
         raise RuntimeError(
             "catalog rewrite lost the commit-log race 5 times in a row"

@@ -2191,7 +2191,9 @@ def read_rollup_series(
     consults ``rollup_dir``'s marker even when ``df`` overrides the
     directory read (the snapshot is of the same pruned lake).  The
     Engine passes ``clamp_to_retention=True``: it memoizes this frame
-    once and refuses pre-horizon queries per request with its own
+    per log-gated partials frame and retention horizon (one build, and
+    one tag-key collect, per commit-log generation) and refuses
+    pre-horizon queries per request with its own
     ``_guard_fine_retention``.
     """
     bound = guard_sketch_retention(

@@ -55,6 +55,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -419,6 +420,18 @@ def _find_retained(root: str, rel: str) -> str | None:
     return sorted(hits)[0] if hits else None
 
 
+#: _read_section memo keyed by (session, section root, resolved live files,
+#: resolved ``_retained`` files): a façade serving many queries at one log
+#: position reuses the frame instead of paying ``spark.read.parquet``'s
+#: schema-inference job per query.  Correct because committed files are
+#: immutable and every rewrite (compaction, catalog rewrite, backfill,
+#: retention moves) yields a different file list, so a key never names
+#: changed data.  Bounded FIFO; lock-guarded (concurrent request threads).
+_SECTION_MEMO: dict = {}
+_SECTION_MEMO_MAX = 32
+_SECTION_MEMO_LOCK = threading.Lock()
+
+
 def _read_section(
     spark: SparkSession, root: str, rel_files: list[str], schema_hint: str | None
 ) -> DataFrame:
@@ -449,17 +462,28 @@ def _read_section(
             f"{len(missing)} committed file(s) not yet moved into place "
             f"(in-flight batch) — retry; first: {missing[0]}"
         )
+    gens = sorted(retained.items())
+    key = (spark, root, tuple(live), tuple((g, tuple(p)) for g, p in gens))
+    with _SECTION_MEMO_LOCK:
+        hit = _SECTION_MEMO.get(key)
+    if hit is not None:
+        return hit
     # basePath keeps ksid=…/date=… partition-column derivation identical to
     # a directory read, so downstream partition pruning still works.
     frames = []
     if live:
         frames.append(spark.read.option("basePath", root).parquet(*live))
-    for gen, paths in sorted(retained.items()):
+    for gen, paths in gens:
         frames.append(spark.read.option("basePath", gen).parquet(*paths))
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    return out
+    with _SECTION_MEMO_LOCK:
+        if key not in _SECTION_MEMO:
+            if len(_SECTION_MEMO) >= _SECTION_MEMO_MAX:
+                _SECTION_MEMO.pop(next(iter(_SECTION_MEMO)))
+            _SECTION_MEMO[key] = out
+        return _SECTION_MEMO[key]
 
 
 def read_points_snapshot(

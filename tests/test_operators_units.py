@@ -575,8 +575,8 @@ def test_pair_dot_arrow_bit_parity(spark):
 
 
 def test_pair_dot_arrow_rejects_ragged_and_null(spark):
-    """The kernel's preconditions fail LOUDLY: ragged array lengths and
-    null arrays raise instead of silently mis-folding."""
+    """The kernel's preconditions fail LOUDLY: ragged array lengths, null
+    arrays and all-empty arrays raise instead of silently mis-folding."""
     import pytest
 
     from mycenae_spark.functions.similarity import pair_dot_arrow
@@ -592,3 +592,9 @@ def test_pair_dot_arrow_rejects_ragged_and_null(spark):
     )
     with pytest.raises(Exception, match="null embedding"):
         pair_dot_arrow(withnull, "_ea", "_eb", ["i"], "d").collect()
+    empty = spark.createDataFrame(
+        [(1, [], []), (2, [], [])],
+        "i long, _ea array<double>, _eb array<double>",
+    )
+    with pytest.raises(Exception, match="empty embedding"):
+        pair_dot_arrow(empty, "_ea", "_eb", ["i"], "d").collect()

@@ -861,6 +861,160 @@ def test_tag_key_discovery_reads_catalog_not_lake(spark, tmp_path_factory):
     ])
     assert eng._tag_keys() == ["dc", "host"]
 
+    # a put whose keys are all known cannot grow the catalog's key set:
+    # the cache survives it untouched (the poison would be dropped on a
+    # recompute)…
+    eng._tag_keys_cache = poisoned = ["dc", "host", "sentinel"]
+    eng.put([
+        {"metric": "m.c", "tags": {"ksid": "k1", "host": "h9", "dc": "us"},
+         "timestamp": BASE_TS, "value": 3.0},
+    ])
+    assert eng._tag_keys_cache is poisoned
+    # …while a put carrying a new key still invalidates
+    eng.put([
+        {"metric": "m.c", "tags": {"ksid": "k1", "zone": "z1"},
+         "timestamp": BASE_TS, "value": 4.0},
+    ])
+    assert eng._tag_keys_cache is None
+    assert eng._tag_keys() == ["dc", "host", "zone"]
+
+
+def test_tag_key_cache_holds_the_head_catalogs_keys(spark, tmp_path_factory):
+    """put keeps the tag-key cache across known-key batches, which is exact
+    only if the cached set is the HEAD catalog's.  A query pinned before a
+    new-key put that refills the cache after it must not store the older
+    set (a later known-key put would keep it, hiding ``tag_zone``), and a
+    read overtaken by an invalidation must not store at all."""
+    from mycenae_spark.server import Engine
+    from mycenae_spark.streaming import commitlog
+
+    d = tmp_path_factory.mktemp("tagkeys_head")
+    lake, catalog = str(d / "lake"), str(d / "catalog")
+    eng = Engine(spark, lake, catalog)
+    eng.put([
+        {"metric": "m.a", "tags": {"ksid": "k1", "host": "h0"},
+         "timestamp": BASE_TS, "value": 1.0},
+    ])
+    eng.checkpoint()
+    pin = commitlog.latest_seq(lake)
+    eng.put([
+        {"metric": "m.a", "tags": {"ksid": "k1", "zone": "z1"},
+         "timestamp": BASE_TS, "value": 2.0},
+    ])
+    assert eng._tag_keys_cache is None
+
+    # a request pinned before the new-key put misses and refills the cache
+    eng._read_pin.as_of = pin
+    try:
+        assert eng._tag_keys() == ["host", "zone"]
+        assert "tag_zone" in eng._points().columns
+    finally:
+        eng._read_pin.as_of = None
+    eng.put([
+        {"metric": "m.a", "tags": {"ksid": "k1", "host": "h1"},
+         "timestamp": BASE_TS, "value": 3.0},
+    ])
+    assert eng._tag_keys_cache == ["host", "zone"]
+    rows = eng.query({
+        "start": BASE_TS - 60_000, "end": BASE_TS + 60_000,
+        "queries": [{"metric": "m.a", "aggregator": "sum",
+                     "filters": [{"tagk": "zone", "type": "wildcard",
+                                  "filter": "*", "groupBy": True}]}],
+    })
+    assert [(r["tags"], list(r["dps"].values())) for r in rows] == [
+        ({"zone": "z1"}, [2.0])
+    ]
+
+    # an invalidation landing while a read runs: the read answers, uncached
+    read = eng._read_catalog
+
+    def overtaken(**kw):
+        cat = read(**kw)
+        eng._drop_tag_keys()
+        return cat
+
+    eng._read_catalog = overtaken
+    try:
+        eng._drop_tag_keys()
+        assert eng._tag_keys() == ["host", "zone"]
+        assert eng._tag_keys_cache is None
+    finally:
+        del eng._read_catalog
+    assert eng._tag_keys() == ["host", "zone"]
+    assert eng._tag_keys_cache == ["host", "zone"]
+
+
+def _frame_build_jobs(spark, eng, body) -> int:
+    """Run ``eng.query(body)`` and count the Spark jobs its frame build
+    (``_build_frames``) launched, via a job group around that call only."""
+    import uuid
+
+    sc = spark.sparkContext
+    build, calls = eng._build_frames, []
+
+    def counted(*a, **k):
+        group = f"build-frames-{uuid.uuid4().hex}"
+        calls.append(group)
+        sc.setJobGroup(group, "frame build")
+        try:
+            return build(*a, **k)
+        finally:
+            sc.setJobGroup("", "")
+
+    eng._build_frames = counted
+    try:
+        eng.query(body)
+    finally:
+        del eng._build_frames
+    assert calls, "the query never built frames (result-cache hit?)"
+    return sum(
+        len(sc.statusTracker().getJobIdsForGroup(g)) for g in calls
+    )
+
+
+def test_serving_frames_reused_within_a_generation(spark, tmp_path_factory):
+    """Serving frames are built once per commit-log generation: at one log
+    position, a second FRESH query (a result-cache miss) builds its
+    points and fine-rollup frames without a single Spark job — no
+    schema-inference read, no tag-key collect — and answers exactly like
+    a cold engine.  A put moves the generation: the next query reads the
+    new file set and includes the put."""
+    from mycenae_spark.server import Engine
+    from mycenae_spark.streaming import snapshot
+
+    d = tmp_path_factory.mktemp("framememo")
+    lake, catalog, roll = (str(d / n) for n in ("lake", "catalog", "rollup"))
+    eng = Engine(spark, lake, catalog, rollup_dir=roll)
+    eng.put([{"metric": "fm.m", "tags": {"ksid": "k1", "host": f"h{i % 2}"},
+              "timestamp": BASE_TS + i * 60_000, "value": float(i)}
+             for i in range(10)])
+    eng.checkpoint()
+
+    def body(downsample):
+        q = {"metric": "fm.m", "aggregator": "sum"}
+        if downsample:
+            q["downsample"] = downsample
+        return {"start": BASE_TS, "end": BASE_TS + 600_000, "queries": [q]}
+
+    assert _frame_build_jobs(spark, eng, body("1m-avg")) > 0  # cold build
+    assert _frame_build_jobs(spark, eng, body("5m-avg")) == 0
+    assert eng.last_routes() == ["fine"]  # served from the reused rollup
+    assert _frame_build_jobs(spark, eng, body(None)) == 0
+
+    def cold_answer(b):
+        snapshot._SECTION_MEMO.clear()
+        return Engine(spark, lake, catalog, rollup_dir=roll).query(b)
+
+    before = {ds: eng.query(body(ds)) for ds in ("5m-avg", None)}
+    assert before == {ds: cold_answer(body(ds)) for ds in before}
+
+    eng.put([{"metric": "fm.m", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + 1, "value": 100.0}])
+    after = {ds: eng.query(body(ds)) for ds in before}  # cache misses
+    for ds in before:
+        assert after[ds] != before[ds]  # the put is visible
+        assert after[ds] == cold_answer(body(ds))
+
 
 def test_engine_log_gated_reads_after_checkpoint(spark, tmp_path_factory):
     """Engine.checkpoint() switches the query path to log-gated snapshot

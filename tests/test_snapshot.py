@@ -333,3 +333,103 @@ def test_incremental_checkpoint_requires_baseline(spark, tmp_path):
     snapshot.write_checkpoint(lake, catalog)
     # with a baseline the explicit mode works
     assert snapshot.write_checkpoint(lake, catalog, mode="incremental")
+
+
+def test_section_frame_memoized_per_file_set(spark, tmp_path):
+    """_read_section reuses its frame while the resolved file set repeats
+    (no schema-inference job per read), and a new commit — a new file set
+    — builds a new frame that includes the batch."""
+    lake, catalog = _setup_lake(spark, tmp_path, batches=1)
+    snapshot.write_checkpoint(lake, catalog)
+    df1 = snapshot.read_points_snapshot(spark, lake)
+    assert snapshot.read_points_snapshot(spark, lake) is df1
+    write_points_batch(_mk_points(spark, metric="memo"), lake, catalog,
+                       batch_id="memo-b")
+    df2 = snapshot.read_points_snapshot(spark, lake)
+    assert df2 is not df1 and df2.count() == 12 and df1.count() == 6
+
+
+def test_memoized_pin_served_from_retained_after_compaction(spark, tmp_path):
+    """A read pinned before a compaction keeps resolving after it: the
+    superseded files moved to ``_retained/<seq>/``, so the same pin names
+    a new (retained) file set and never the memoized live-path frame."""
+    import glob
+    import os
+
+    from mycenae_spark.maintenance import compact_partition
+
+    lake, catalog = _setup_lake(spark, tmp_path, batches=3)
+    pin = snapshot.write_checkpoint(lake, catalog)
+    before = snapshot.read_points_snapshot(spark, lake, as_of=pin)
+    assert before.count() == 18
+    date = os.path.basename(
+        glob.glob(f"{lake}/ksid=ks1/date=*")[0]
+    ).split("=", 1)[1]
+    compact_partition(spark, lake, "ks1", date, target_file_bytes=1 << 30)
+
+    pinned = snapshot.read_points_snapshot(spark, lake, as_of=pin)
+    assert pinned is not before
+    assert pinned.count() == 18
+    assert pinned.inputFiles() and all(
+        "/_retained/" in f for f in pinned.inputFiles()
+    )
+    assert snapshot.read_points_snapshot(spark, lake).count() == 18
+
+
+def test_memoized_file_set_still_raises_transient_in_flight(spark, tmp_path):
+    """The memo skips only the parquet read: the per-file existence check
+    runs on every call, so a committed file missing from a file set that
+    was read (and memoized) before still raises TransientInFlight."""
+    import os
+
+    lake, catalog = _setup_lake(spark, tmp_path, batches=1)
+    snapshot.write_checkpoint(lake, catalog)
+    snapshot.read_points_snapshot(spark, lake)  # memoized key
+    victim = os.path.join(lake, snapshot.resolve(lake)["points"][0])
+    os.rename(victim, victim + ".moving")
+    try:
+        with pytest.raises(snapshot.TransientInFlight):
+            snapshot.read_points_snapshot(spark, lake)
+    finally:
+        os.rename(victim + ".moving", victim)
+    assert snapshot.read_points_snapshot(spark, lake).count() == 6
+
+
+def test_section_memo_concurrent_readers_share_one_frame(spark, tmp_path):
+    """Request threads share the section memo: concurrent readers of one
+    file set all get the same frame (the insert is check-then-act under
+    the lock), and the FIFO never outgrows its bound."""
+    import sys
+    import threading
+
+    lake, catalog = _setup_lake(spark, tmp_path, batches=1)
+    pin = snapshot.write_checkpoint(lake, catalog)
+    write_points_batch(_mk_points(spark, metric="late"), lake, catalog,
+                       batch_id="late")
+    snapshot._SECTION_MEMO.clear()
+    got: list = []
+    lock = threading.Lock()
+
+    def reader(i):
+        df = snapshot.read_points_snapshot(
+            spark, lake, as_of=pin if i % 2 else None
+        )
+        with lock:
+            got.append((i % 2, df))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 8
+    for side in (0, 1):
+        frames = {id(df) for s, df in got if s == side}
+        assert len(frames) == 1, "concurrent readers built rival frames"
+    assert len(snapshot._SECTION_MEMO) <= snapshot._SECTION_MEMO_MAX
